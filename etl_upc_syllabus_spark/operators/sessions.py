@@ -28,7 +28,12 @@ surface the brief adds). Both operators are pure DataFrame ops:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Iterator, Sequence
+from typing import Any
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -129,6 +134,50 @@ def funnel_reached(
     return reached.select(*out_cols)
 
 
+def sorted_group_scan(
+    df: DataFrame,
+    key: str,
+    order: Sequence[Column | str],
+    step: Callable[[pd.DataFrame, np.ndarray, Any], tuple[pd.DataFrame, Any]],
+    schema: str,
+) -> DataFrame:
+    """Run a per-key sequential recurrence as ONE sorted-partition scan.
+
+    One hash repartition on ``key``, an in-partition JVM sort on
+    ``(key, *order)``, then a single ``mapInPandas`` pass: one Python
+    call per Arrow batch, never one per key (a per-key
+    ``applyInPandas`` pays a Python invocation and a pandas frame for
+    each of ~12.5k tiny user groups on the events fixture).
+
+    ``step(pdf, starts, state) -> (out_pdf, state)`` sees each
+    non-empty batch once. ``starts`` is a boolean array, True where a
+    row begins a new key; the first row of a batch is compared with the
+    key that ended the previous batch, so a key run may continue across
+    batches and ``state`` (None before a partition's first batch)
+    carries the recurrence over the boundary. A NULL key surfaces as
+    NaN in pandas and forms ONE group, as ``groupBy``/``PARTITION BY``
+    group it.
+    """
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prev: tuple[Any, bool] | None = None  # (last key, last key is NULL)
+        state = None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            k = pdf[key].to_numpy()
+            na = pd.isna(k)
+            starts = np.empty(len(k), dtype=bool)
+            starts[1:] = (k[1:] != k[:-1]) & ~(na[1:] & na[:-1])
+            starts[0] = prev is None or (not (na[0] and prev[1]) and k[0] != prev[0])
+            out, state = step(pdf, starts, state)
+            prev = (k[-1], bool(na[-1]))
+            yield out
+
+    part = df.repartition(key).sortWithinPartitions(key, *order)
+    return part.mapInPandas(scan, schema=schema)
+
+
 DEBOUNCE_SCHEMA = "user_id bigint, event_id bigint, ts_us bigint"
 
 
@@ -148,57 +197,29 @@ def debounce(
     e.g. t = 0, 5, 9 with gap 6 keeps {0, 9} (9 - 0 > 6) where the
     session rule keeps only {0}.
 
-    Implemented (r16 rework) as a SORTED-PARTITION scan: one hash
-    repartition on the user key, an in-partition sort on
-    (user, ts NULLS LAST, order) -- the same per-group order the old
-    pandas ``sort_values(["_t", "_o"])`` produced -- and ONE
-    ``mapInPandas`` pass whose recurrence state (current user, last
-    kept timestamp) carries across Arrow batches. The previous
-    ``groupBy().applyInPandas`` form paid one Python invocation + one
-    pandas frame per user key (~12.5k tiny groups on the fixture);
-    the partition scan runs one Python invocation per Arrow batch --
-    measured 5.6x at sf0.1 with byte-identical output (guide section
-    4: same boundary crossings, amortised per batch instead of per
-    key). Same single shuffle; the streaming twin remains
-    applyInPandasWithState. The oracle replays the identical
-    recurrence with a DuckDB recursive CTE.
+    Runs as a :func:`sorted_group_scan` over (user, ts NULLS LAST,
+    order NULLS LAST) whose state is the last kept timestamp -- measured
+    5.6x over the per-key ``applyInPandas`` form at sf0.1 with identical
+    output. The streaming twin remains applyInPandasWithState. The
+    oracle replays the identical recurrence with a DuckDB recursive CTE.
     """
-    from collections.abc import Iterator
 
-    import pandas as pd
-
-    def scan_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sentinel = object()
-        cur_u, last = sentinel, None
-        for pdf in batches:
-            kept_rows = []
-            for u, o, t in zip(pdf["_u"], pdf["_o"], pdf["_t"]):
-                # NULL users form ONE group, exactly as groupBy("_u")
-                # grouped them (pandas surfaces them as NaN, and
-                # NaN != NaN would otherwise reset state per row)
-                same = (
-                    cur_u is not sentinel
-                    and (u == cur_u or (pd.isna(u) and pd.isna(cur_u)))
-                )
-                if not same:
-                    cur_u, last = u, None
-                if last is None or t - last > gap_us:
-                    kept_rows.append((u, o, t))
-                    last = t
-            yield pd.DataFrame(
-                kept_rows, columns=["user_id", "event_id", "ts_us"]
-            )
+    def keep_step(pdf: pd.DataFrame, starts: np.ndarray, last: Any):
+        keep = np.zeros(len(pdf), dtype=bool)
+        for i, (s, t) in enumerate(zip(starts.tolist(), pdf["ts_us"].tolist())):
+            if s or t - last > gap_us:
+                keep[i] = True
+                last = t
+        return pdf[keep], last
 
     prepped = events.select(
-        F.col(user_col).alias("_u"),
-        F.col(order_col).alias("_o"),
-        F.unix_micros(F.col(ts_col)).alias("_t"),
+        F.col(user_col).alias("user_id"),
+        F.col(order_col).alias("event_id"),
+        F.unix_micros(F.col(ts_col)).alias("ts_us"),
     )
-    part = prepped.repartition("_u").sortWithinPartitions(
-        # both sort keys NULLS LAST: pandas sort_values put NaN last and
-        # the DuckDB oracle's ORDER BY ts, event_id is NULLS LAST, so a
-        # null event_id tied on timestamp must lose the tie-break here
-        # too (ADVICE r16) -- Spark's default asc() is NULLS FIRST
-        "_u", F.col("_t").asc_nulls_last(), F.col("_o").asc_nulls_last()
-    )
-    return part.mapInPandas(scan_partition, schema=DEBOUNCE_SCHEMA)
+    # both sort keys NULLS LAST: the DuckDB oracle's ORDER BY ts,
+    # event_id is NULLS LAST, so a null event_id tied on timestamp must
+    # lose the tie-break here too (ADVICE r16) -- Spark's default asc()
+    # is NULLS FIRST
+    order = [F.col("ts_us").asc_nulls_last(), F.col("event_id").asc_nulls_last()]
+    return sorted_group_scan(prepped, "user_id", order, keep_step, DEBOUNCE_SCHEMA)

@@ -1,13 +1,12 @@
 """Extended operator coverage: as-of join, range window frames,
 from_json, document chunking (UDTF shape), embedding-cosine near-dup,
-grouped-map applyInPandas, and the Arrow scalar-UDF seam
+grouped-map rank (sorted-group scan), and the Arrow scalar-UDF seam
 (SURVEY.md 2.3 absent-joins, 2.5 frames, 2.8 json, 2.10 UDF surface).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -15,6 +14,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..operators.asof import asof_join
+from ..operators.sessions import sorted_group_scan
 from ..operators import textanalysis as ta
 from ..sources.tables import fan_out, load_table
 from . import _fragments as fr
@@ -215,12 +215,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deliberately integer-exact so the Python path is fully "
     "oracle-checkable. The hot-path equivalent stays JVM-side "
     "(window_topk_per_group); this query exists to exercise the seam. "
-    "r17 rework (the events_debounce pattern, guide section 4): one "
-    "user-key hash repartition + in-partition JVM sort (user, value "
-    "DESC, event_id), then a single mapInPandas scan whose rank "
-    "counter carries across Arrow batches -- one Python call per "
-    "batch instead of one per user key (~12.5k tiny groups before; "
-    "measured 4.4 s -> ~0.6 s at sf0.1, byte-identical). NaN posture "
+    "Runs as the shared sorted_group_scan (operators/sessions.py) "
+    "over (user, value DESC, event_id) with a vectorised rank counter "
+    "carried across Arrow batches -- one Python call per batch instead "
+    "of one per user key (measured 4.4 s -> ~0.6 s at sf0.1, "
+    "byte-identical). NaN posture "
     "(r10, nan_probe events leg): Spark's sort treats NaN as greater "
     "than every finite double, so value DESC places NaN first -- the "
     "same NaN-greater-than-all convention DuckDB applies, poisoned "
@@ -231,46 +230,22 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("udf", "map-in-pandas", "pandas"),
 )
 def grouped_map_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
 
-    def rank_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # recurrence state across Arrow batches: the user whose run may
-        # continue into the next batch, and the rank it reached. NULL
-        # users surface as NaN in a float column and must form ONE
-        # group, exactly as PARTITION BY groups them.
-        prev_u, prev_rnk = None, 0
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            u = pdf["user_id"]
-            # cumcount within consecutive runs of the sorted user key
-            # (dropna=False: one NaN group, not per-row groups)
-            rnk = pdf.groupby("user_id", sort=False, dropna=False).cumcount().values + 1
-            uv = u.values
-            first = uv[0]
-            if prev_u is not None and (
-                first == prev_u or (pd.isna(first) and pd.isna(prev_u))
-            ):
-                # the leading run continues the previous batch's user
-                run = (uv == first) | (pd.isna(uv) if pd.isna(first) else False)
-                lead = int(run.argmin()) if not run.all() else n
-                rnk[:lead] += prev_rnk
-            prev_u, prev_rnk = uv[-1], int(rnk[-1])
-            yield pd.DataFrame(
-                {"event_id": pdf["event_id"], "user_id": u, "rnk": rnk}
-            )
+    def rank_step(pdf: pd.DataFrame, starts, last_rnk):
+        i = np.arange(len(pdf))
+        # index of each row's run start; a run continued from the
+        # previous batch began last_rnk rows before this batch
+        run_start = np.maximum.accumulate(np.where(starts, i, -(last_rnk or 0)))
+        rnk = i - run_start + 1
+        return pdf[["event_id", "user_id"]].assign(rnk=rnk), int(rnk[-1])
 
-    part = ev.repartition("user_id").sortWithinPartitions(
-        # value DESC: Spark orders NaN above every finite double (NaN
-        # first), NULL last -- both matching the DuckDB oracle; ties
-        # broken by event_id ASC as in the oracle's ORDER BY
-        "user_id", F.col("value").desc(), F.col("event_id").asc_nulls_last()
-    )
-    return part.mapInPandas(
-        rank_scan, schema="event_id long, user_id long, rnk long"
+    # value DESC: Spark orders NaN above every finite double (NaN
+    # first), NULL last -- both matching the DuckDB oracle; ties broken
+    # by event_id ASC as in the oracle's ORDER BY
+    order = [F.col("value").desc(), F.col("event_id").asc_nulls_last()]
+    return sorted_group_scan(
+        ev, "user_id", order, rank_step, "event_id long, user_id long, rnk long"
     )
 
 

@@ -41,31 +41,10 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-#: Specs STAGED for a sanctioned future registry swap -- full
-#: QuerySpecs (Spark fn + oracle) that are NOT part of the driver
-#: contract: queries()/oracle_sql() never include them (the registry
-#: is frozen at 199 per VERDICT r6 item 1). They exist so a
-#: pre-announced swap can land with its oracle mirror, replica
-#: evidence, and tests already in place -- the flip is then a
-#: one-line move from here into the registry (executed once so far:
-#: dedup_embedding_cosine -> its banded scale-path twin, sanctioned
-#: r10, staged r11, flipped r12; see _PLAN_SWAPPED). Checked by
-#: ``tools/verify_local.py --staged`` and by pytest, never by the
-#: driver.
-_STAGED: dict[str, QuerySpec] = {}
-
 
 def register(spec: QuerySpec) -> QuerySpec:
     if spec.name in _REGISTRY:
         raise ValueError(f"duplicate query name {spec.name!r}")
-    if spec.name in _STAGED:
-        # a sanctioned swap must MOVE the spec out of _STAGED, not
-        # leave two diverging copies of one name live in both
-        # registries (review r11) -- the flip is delete-and-register
-        raise ValueError(
-            f"query name {spec.name!r} is still staged; move it out of "
-            "the staged registry when promoting it"
-        )
     _REGISTRY[spec.name] = spec
     return spec
 
@@ -78,28 +57,6 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
         return fn
 
     return deco
-
-
-def staged_query(
-    name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
-):
-    """Decorator registering into the STAGED side registry (see
-    ``_STAGED``): evidence surface for a sanctioned future swap, never
-    part of the driver contract."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        if name in _STAGED or name in _REGISTRY:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        _STAGED[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc, tags=tags)
-        return fn
-
-    return deco
-
-
-def staged_specs() -> dict[str, QuerySpec]:
-    """The staged (non-driver) specs; same shape as :func:`all_specs`."""
-    _load_all()
-    return dict(_STAGED)
 
 
 def _load_all() -> None:
@@ -216,8 +173,8 @@ _STALE_GREEN_BROKEN = frozenset(
 # new oracle); after that the normal ordering takes back over.
 _PLAN_SWAPPED: dict[str, int] = {
     # r12: banded corpus-scaled LSH replaced the fixed 8-plane
-    # single-band shape (VERDICT r10 item 3 sanction; staged +
-    # rehearsed r11; executed r12 -- see extended_queries.py docstring)
+    # single-band shape (VERDICT r10 item 3 sanction; executed r12 --
+    # see extended_queries.py docstring)
     "dedup_embedding_cosine": 12,
 }
 

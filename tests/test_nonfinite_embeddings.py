@@ -21,9 +21,9 @@ Two hostile element classes the r8 sweeps never injected:
   corrupt-seed codebook semantics.
 
 The events leg's pandas-rank divergence (grouped_map_rank) is also
-closed in r10: the seam sorts NaN FIRST under DESC, matching both
-engines' NaN-greater-than-all convention (events probe 32/38, all 6
-residuals loud DECIMAL/BIGINT cast refusals + the stateful mid-batch
+closed in r10: the JVM sort ahead of the scan puts NaN FIRST under
+DESC, matching both engines' NaN-greater-than-all convention (events
+probe 32/38, all 6 residuals loud DECIMAL/BIGINT cast refusals + the stateful mid-batch
 death, guarded by quarantine_nonfinite).
 """
 
@@ -184,9 +184,11 @@ def test_indexable_predicate(spark):
 def test_grouped_map_rank_nan_sorts_first_like_sql(spark, tmp_path):
     """The r9 events-probe divergence, closed: pandas sort_values puts
     NaN last by default where SQL row_number(ORDER BY value DESC) puts
-    NaN first (NaN > every double in Spark AND DuckDB) -- the seam now
-    ranks the NaN flag as the leading DESC key, so a poisoned value
-    takes rank 1 in both engines."""
+    NaN first (NaN > every double in Spark AND DuckDB) -- the JVM sort
+    ahead of the scan ranks a poisoned value 1 in both engines. Also
+    run at 2-row Arrow batches, where a NULL-user run and a non-NULL
+    run each continue across batches, so the rank carry is checked
+    against DuckDB row_number() too."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -194,21 +196,21 @@ def test_grouped_map_rank_nan_sorts_first_like_sql(spark, tmp_path):
     import duckdb
 
     ts = pd.Timestamp("2024-01-01")
+    users = [7] * 4 + [None] * 5 + [3] * 5 + [5]
+    values = [5.0, float("nan"), 9.0, 1.0, 3.0, 2.0, 8.0, 2.0, 6.0, 1.0, 1.0, 1.0, 4.0, 0.0, 2.0]
+    n = len(users)
     tbl = pa.table(
         {
-            "event_id": pa.array([1, 2, 3, 4], type=pa.int64()),
-            "ts": pa.array([ts] * 4, type=pa.timestamp("us")),
-            "user_id": pa.array([7, 7, 7, 7], type=pa.int64()),
-            "event_type": pa.array(["a"] * 4),
-            "value": pa.array([5.0, float("nan"), 9.0, 1.0], type=pa.float64()),
-            "props": pa.array(["{}"] * 4),
+            "event_id": pa.array(range(1, n + 1), type=pa.int64()),
+            "ts": pa.array([ts] * n, type=pa.timestamp("us")),
+            "user_id": pa.array(users, type=pa.int64()),
+            "event_type": pa.array(["a"] * n),
+            "value": pa.array(values, type=pa.float64()),
+            "props": pa.array(["{}"] * n),
         }
     )
     pq.write_table(tbl, str(tmp_path / "events.parquet"))
     spec = all_specs()["grouped_map_rank"]
-    got = {
-        r["event_id"]: r["rnk"] for r in spec.fn(spark, str(tmp_path)).collect()
-    }
     want = {
         r[0]: r[1]
         for r in duckdb.sql(
@@ -217,8 +219,18 @@ def test_grouped_map_rank_nan_sorts_first_like_sql(spark, tmp_path):
                 FROM '{tmp_path}/events.parquet'"""
         ).fetchall()
     }
-    assert got == want
-    assert got[2] == 1, "NaN must take rank 1 under DESC, as in SQL"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    try:
+        for batch_rows in (saved, "2"):
+            spark.conf.set(key, batch_rows)
+            got = {
+                r["event_id"]: r["rnk"] for r in spec.fn(spark, str(tmp_path)).collect()
+            }
+            assert got == want, batch_rows
+            assert got[2] == 1, "NaN must take rank 1 under DESC, as in SQL"
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_quarantine_nonfinite_splits_and_names_culprits(spark):

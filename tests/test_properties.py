@@ -105,15 +105,15 @@ def test_calendar_invariant_under_row_order(spark):
 # ---- session-operator properties (hypothesis) ---------------------------
 
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
 @st.composite
 def _event_offsets(draw):
-    # up to 3 users, each with up to 12 events at second offsets; ties allowed
+    # up to 3 users plus NULL, up to 12 events at second offsets; ties allowed
     n = draw(st.integers(1, 12))
-    users = draw(st.lists(st.integers(1, 3), min_size=n, max_size=n))
+    users = draw(st.lists(st.sampled_from([None, 1, 2, 3]), min_size=n, max_size=n))
     offs = draw(st.lists(st.integers(0, 5000), min_size=n, max_size=n))
     return list(zip(range(1, n + 1), users, offs))
 
@@ -135,7 +135,16 @@ def _py_debounce(rows, gap_us):
 
 @settings(max_examples=15, deadline=None)
 @given(_event_offsets(), st.integers(1, 600))
+# a NULL-user run and a user-1 run, each spanning two 2-row Arrow
+# batches: a reset at the batch boundary would keep 120 and drop 200
+@example(
+    [(1, None, 0), (2, None, 100), (3, None, 120), (4, None, 200),
+     (5, 1, 0), (6, 1, 100), (7, 1, 120), (8, 1, 200)],
+    150,
+)
 def test_debounce_matches_python_reference(spark, rows, gap_s):
+    """Run at 2-row Arrow batches so user runs (NULL users included)
+    continue across batches and the scan's key/state carry is hit."""
     import datetime as dt
 
     from etl_upc_syllabus_spark.operators.sessions import debounce
@@ -146,7 +155,13 @@ def test_debounce_matches_python_reference(spark, rows, gap_s):
         "event_id long, ts timestamp, user_id long",
     )
     gap_us = gap_s * 1_000_000
-    got = {r["event_id"] for r in debounce(df, gap_us=gap_us).collect()}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = {r["event_id"] for r in debounce(df, gap_us=gap_us).collect()}
+    finally:
+        spark.conf.set(key, saved)
     assert got == _py_debounce(rows, gap_us)
 
 

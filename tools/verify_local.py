@@ -6,7 +6,6 @@ Usage: python tools/verify_local.py [name ...]
                                                    # plan shape (never-verified,
                                                    # broken-latest, post-swap)
        python tools/verify_local.py --all
-       python tools/verify_local.py --staged       # staged (non-driver) swap twins
 
 Runs each registered query at sf0.01 and compares it against its
 DuckDB oracle with tests.oracle_harness.compare (harsher than the
@@ -23,11 +22,7 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from etl_upc_syllabus_spark.plans.registry import (  # noqa: E402
-    _verified_names,
-    all_specs,
-    staged_specs,
-)
+from etl_upc_syllabus_spark.plans.registry import _verified_names, all_specs  # noqa: E402
 from etl_upc_syllabus_spark.session import get_spark  # noqa: E402
 from tests.oracle_harness import compare, duckdb_run  # noqa: E402
 
@@ -41,11 +36,6 @@ def main() -> int:
         verified = _verified_names()
         names = [n for n in specs if n not in verified]
     elif args == ["--all"]:
-        names = list(specs)
-    elif args == ["--staged"]:
-        # the evidence surface for sanctioned future registry swaps
-        # (registry.py _STAGED) -- never part of the driver contract
-        specs = staged_specs()
         names = list(specs)
     else:
         names = args
