@@ -54,24 +54,38 @@ def main(argv: list[str] | None = None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
 
     raw = extract.extract_documents(extract.read_syllabus_pdfs(spark, args.input_dir))
-    good, bad = assemble.split_quarantine(assemble.parse_documents(raw, nfkc=args.nfkc))
+    # good and bad both read this cache, so each PDF is scanned,
+    # extracted and parsed once per run
+    parsed = assemble.parse_documents(raw, nfkc=args.nfkc).persist()
+    good, bad = assemble.split_quarantine(parsed)
 
-    config_path = args.config
-    if config_path is None:
-        for cand in (os.path.join(args.input_dir, "config.json"), "config.json"):
-            if os.path.exists(cand):
-                config_path = cand
-                break
-    if config_path:
-        with open(config_path, encoding="utf-8") as fh:
-            good = assemble.enrich_dates(good, assemble.load_periods(spark, json.load(fh)))
-
-    # one action feeds every sink from the same parsed corpus
-    good = good.persist()
     try:
+        # quarantine REPORT as an artifact, not just a log line: the
+        # reference logs-and-drops (etl_pipeline.py:28-30); operators
+        # of a real corpus need the reject list (id + typed error) to
+        # triage. Rejects are a tiny fraction of the corpus (errors,
+        # not data), so one driver-side collect is the honest cost.
+        # Collected first, it builds the parsed cache in a job of its
+        # own: were the first sink to build it, the periods broadcast
+        # job would race the scan for cores, in an order that varies
+        # from run to run.
+        rejects = [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
+
+        config_path = args.config
+        if config_path is None:
+            for cand in (os.path.join(args.input_dir, "config.json"), "config.json"):
+                if os.path.exists(cand):
+                    config_path = cand
+                    break
+        if config_path:
+            with open(config_path, encoding="utf-8") as fh:
+                good = assemble.enrich_dates(good, assemble.load_periods(spark, json.load(fh)))
+
+        # the sinks and the calendar read the enriched corpus from this
+        # cache, so the periods broadcast and the enrichment run once
+        good = good.persist()
         os.makedirs(args.output_dir, exist_ok=True)
-        written = sinks.write_per_record_json(good, args.output_dir)
-        sinks.write_all_courses_json(good, args.output_dir)
+        written, _ = sinks.write_json_artifacts(good, args.output_dir)
         # gate off: periods here come from parse_filename ('YYYY-T',
         # inference-proof and sentinel-free by construction), so the
         # validation pass would only re-scan the persisted frame
@@ -80,12 +94,6 @@ def main(argv: list[str] | None = None) -> int:
             assemble.weekly_calendar(good),
             os.path.join(args.output_dir, "weekly_calendar.pdf"),
         )
-        # quarantine REPORT as an artifact, not just a log line: the
-        # reference logs-and-drops (etl_pipeline.py:28-30); operators
-        # of a real corpus need the reject list (id + typed error) to
-        # triage. Rejects are a tiny fraction of the corpus (errors,
-        # not data), so one driver-side collect is the honest cost.
-        rejects = [{"id": r["id"], "error": r["error"]} for r in bad.collect()]
         with open(
             os.path.join(args.output_dir, "quarantine.json"), "w", encoding="utf-8"
         ) as fh:
@@ -93,6 +101,7 @@ def main(argv: list[str] | None = None) -> int:
         n_bad = len(rejects)
     finally:
         good.unpersist()
+        parsed.unpersist()
 
     print(f"Processed {len(written)} courses successfully")
     if n_bad:

@@ -11,6 +11,8 @@ the JSON writers exist for reference-contract parity:
   contract of reference prompt_format.txt:9) -- rendered executor-side
   as per-partition fragments, stream-merged by the driver.
 
+``write_json_artifacts`` writes S4 and S5 from one pass over the frame.
+
 Reference bugs fixed rather than reproduced (SURVEY 7 'faithful-vs-
 fixed'): find_by_id globbed '{id}_*.json' which can never match S4's
 '{name}-{nrc}.json' filenames (etl_infrastructure.py:160-166), and
@@ -252,9 +254,24 @@ def _gate_period_keys(
     return clean
 
 
+def write_json_artifacts(courses: DataFrame, base_path: str) -> tuple[list[str], str]:
+    """S4 and S5 from one pass over ``courses``: every per-record file
+    and ``all_courses.json``, with each serialized row parsed once.
+
+    Returns (per-record paths, all_courses.json path). The bytes are
+    those :func:`write_per_record_json` and
+    :func:`write_all_courses_json` write, which run the same kernel
+    for one artifact each.
+    """
+    return _write_json(courses, base_path, per_record=True, all_courses=True)
+
+
 def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     """S4 compat: one pretty-printed JSON file per course, named
-    '{name}-{nrc}.json' (etl_infrastructure.py:153-158).
+    '{name}-{nrc}.json' (etl_infrastructure.py:153-158). A path
+    separator in that stem becomes '_', so a course called
+    'Taller I/II' is written as 'Taller I_II-{nrc}.json' in
+    ``base_path`` instead of aborting the job.
 
     Files are written *executor-side* (partition-local loop over the
     serialized rows); only the manifest of written paths travels to the
@@ -262,18 +279,7 @@ def write_per_record_json(courses: DataFrame, base_path: str) -> list[str]:
     be a shared filesystem mount -- the scale-correct persistent form
     remains :func:`write_courses_parquet`.
     """
-    os.makedirs(base_path, exist_ok=True)
-
-    def _write_partition(rows):
-        for row in rows:
-            rec = json.loads(row)
-            fname = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}.json"
-            path = os.path.join(base_path, fname)
-            with open(path, "w", encoding="utf-8") as fh:
-                json.dump(rec, fh, ensure_ascii=False, indent=2)
-            yield path
-
-    return courses.toJSON().mapPartitions(_write_partition).collect()
+    return _write_json(courses, base_path, per_record=True, all_courses=False)[0]
 
 
 def write_all_courses_json(courses: DataFrame, base_path: str) -> str:
@@ -286,41 +292,73 @@ def write_all_courses_json(courses: DataFrame, base_path: str) -> str:
     driver-side Python objects. Output bytes are identical to
     ``json.dump(records, fh, ensure_ascii=False, indent=4)``.
     """
+    return _write_json(courses, base_path, per_record=False, all_courses=True)[1]
+
+
+def _record_filename(rec: dict) -> str:
+    stem = f"{rec.get('name') or 'unknown'}-{rec.get('nrc') or 'no-nrc'}"
+    for sep in (os.sep, os.altsep):
+        if sep:
+            stem = stem.replace(sep, "_")
+    return stem + ".json"
+
+
+def _write_json(
+    courses: DataFrame, base_path: str, *, per_record: bool, all_courses: bool
+) -> tuple[list[str], str | None]:
+    """The one executor-side JSON kernel behind S4 and S5: one
+    ``toJSON()`` pass; per row, one ``json.loads``, then the per-record
+    file (indent=2) and/or the partition's all_courses fragment
+    (indent=4). The fragments are concatenated in partition order."""
     os.makedirs(base_path, exist_ok=True)
-    path = os.path.join(base_path, "all_courses.json")
     frag_dir = os.path.join(base_path, _FRAGMENTS_DIRNAME)
-    shutil.rmtree(frag_dir, ignore_errors=True)
-    os.makedirs(frag_dir)
+    if all_courses:
+        shutil.rmtree(frag_dir, ignore_errors=True)
+        os.makedirs(frag_dir)
 
-    def _write_fragment(idx, rows):
-        # One level of json.dump(list, indent=4) indentation = 4 spaces
-        # before every line of each element; elements joined by ",\n".
-        chunks = [
-            "\n".join("    " + line for line in
-                      json.dumps(json.loads(r), ensure_ascii=False, indent=4).splitlines())
-            for r in rows
-        ]
-        if not chunks:
-            return iter(())
-        frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
-        with open(frag, "w", encoding="utf-8") as fh:
-            fh.write(",\n".join(chunks))
-        yield idx, frag
+    def _write_partition(idx, rows):
+        paths, chunks = [], []
+        for row in rows:
+            rec = json.loads(row)
+            if per_record:
+                path = os.path.join(base_path, _record_filename(rec))
+                with open(path, "w", encoding="utf-8") as fh:
+                    json.dump(rec, fh, ensure_ascii=False, indent=2)
+                paths.append(path)
+            if all_courses:
+                # one level of json.dump(list, indent=4) indentation: 4
+                # spaces after every raw "\n", which json emits only
+                # between tokens (str.splitlines() would also split at
+                # a U+2028 or U+0085 inside a string value)
+                chunks.append("    " + json.dumps(rec, ensure_ascii=False, indent=4)
+                              .replace("\n", "\n    "))
+        frag = None
+        if chunks:
+            frag = os.path.join(frag_dir, f"part-{idx:05d}.jsonfrag")
+            with open(frag, "w", encoding="utf-8") as fh:
+                fh.write(",\n".join(chunks))
+        yield paths, frag
 
-    fragments = sorted(courses.toJSON().mapPartitionsWithIndex(_write_fragment).collect())
+    # collect() returns partitions in index order: the fragments' order
+    parts = courses.toJSON().mapPartitionsWithIndex(_write_partition).collect()
+    paths = [p for part_paths, _ in parts for p in part_paths]
+    if not all_courses:
+        return paths, None
+    fragments = [frag for _, frag in parts if frag]
+    path = os.path.join(base_path, "all_courses.json")
     with open(path, "w", encoding="utf-8") as fh:
         if not fragments:
             fh.write("[]")
         else:
             fh.write("[\n")
-            for i, (_, frag) in enumerate(fragments):
+            for i, frag in enumerate(fragments):
                 if i:
                     fh.write(",\n")
                 with open(frag, encoding="utf-8") as src:
                     shutil.copyfileobj(src, fh)
             fh.write("\n]")
     shutil.rmtree(frag_dir, ignore_errors=True)
-    return path
+    return paths, path
 
 
 def read_courses(

@@ -8,7 +8,7 @@ import json
 import os
 
 from etl_upc_syllabus_spark.__main__ import main
-from etl_upc_syllabus_spark.pipeline import minipdf
+from etl_upc_syllabus_spark.pipeline import assemble, calendar, extract, minipdf, sinks
 
 from .test_minipdf import ASSESSMENTS_TABLE, PAGE1, UNITS_TABLE
 
@@ -155,3 +155,97 @@ def test_cli_nfkc_flag_rescues_hostile_headers(spark, tmp_path):
         courses = json.loads((out / "all_courses.json").read_text(encoding="utf-8"))
         assert len(courses) == 1
         assert courses[0]["name"] == expected_name, flag
+
+
+def _syllabus_pages(course):
+    return [
+        PAGE1.replace("Matemática Básica", course),
+        ["VI. UNIDADES DE APRENDIZAJE", ("table", UNITS_TABLE)],
+        ["VIII. EVALUACIÓN", ("table", ASSESSMENTS_TABLE)],
+    ]
+
+
+def test_cli_course_name_with_path_separator(spark, tmp_path):
+    """A '/' in a course name must not abort the run with a
+    FileNotFoundError on '.../Taller I/II-8281.json': the per-record
+    file lands in the output dir with '_' for the separator."""
+    raw = tmp_path / "raw"
+    out = tmp_path / "data"
+    raw.mkdir()
+    minipdf.write_pdf(str(raw / "UG-202520_1AEL0244-8281.pdf"), _syllabus_pages("Taller I/II"))
+
+    assert main([str(raw), str(out)]) == 0
+    assert (out / "Taller I_II-8281.json").exists()
+    courses = json.loads((out / "all_courses.json").read_text(encoding="utf-8"))
+    assert [c["name"] for c in courses] == ["Taller I/II"]
+
+
+def test_cli_scans_each_pdf_once(spark, tmp_path):
+    """One main() call reads each PDF in exactly one job: the parsed
+    corpus is cached before the quarantine split, so the sinks and the
+    quarantine report all read that cache. Counted from the status
+    store like the benchmark's JobCounter: the scan job's stage input
+    records equal the PDF count, while a read of the cache counts its
+    batches (at most one per partition, fewer than the PDFs here).
+
+    The scan job also runs alone: no other job of the call (the periods
+    broadcast among them) runs while it does, so the scan's
+    tasks never compete for cores in an order that varies per run."""
+    n_ok, n_bad = 18, 2
+    raw = tmp_path / "raw"
+    out = tmp_path / "data"
+    raw.mkdir()
+    for i in range(n_ok):
+        minipdf.write_pdf(
+            str(raw / f"UG-202520_1AEL{i:04d}-{1000 + i}.pdf"), _syllabus_pages(f"Curso {i:02d}")
+        )
+    for i in range(n_bad):
+        (raw / f"UG-202520_1AEL99{i:02d}-00{i:02d}.pdf").write_bytes(b"%PDF-1.4 garbage")
+    (raw / "config.json").write_text(
+        json.dumps({"2025-2": {"start_date": "2025-08-25", "end_date": "2025-12-06"}})
+    )
+    n_pdfs = n_ok + n_bad
+    assert extract.read_syllabus_pdfs(spark, str(raw)).rdd.getNumPartitions() < n_pdfs
+
+    # the group tags the call's jobs, including those its plans start
+    # from other threads, and leaves out any other query's jobs
+    group = "test_cli_scans_each_pdf_once"
+    spark.sparkContext.setJobGroup(group, "one main() call")
+    try:
+        assert main([str(raw), str(out)]) == 0
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    job_inputs, spans = [], []
+    for job_id in sorted(spark.sparkContext.statusTracker().getJobIdsForGroup(group)):
+        job = store.job(job_id)
+        stage_ids = job.stageIds()
+        job_inputs.append(sum(store.lastStageAttempt(stage_ids.apply(i)).inputRecords()
+                              for i in range(stage_ids.size())))
+        spans.append((job.submissionTime().get().getTime(), job.completionTime().get().getTime()))
+    assert job_inputs.count(n_pdfs) == 1, f"stage input records per job: {job_inputs}"
+    scan = job_inputs.index(n_pdfs)
+    start, end = spans[scan]
+    overlapping = [i for i, (s, e) in enumerate(spans) if i != scan and s < end and e > start]
+    assert not overlapping, f"jobs running alongside the scan: {overlapping} of {spans}"
+    assert len(json.loads((out / "quarantine.json").read_text(encoding="utf-8"))) == n_bad
+
+
+def test_traced_stage_functions_exist():
+    """The benchmark's traced run (perfbench/tracing.py) wraps these
+    pipeline functions by module attribute name; renaming or removing
+    one crashes that run."""
+    modules = {"extract": extract, "assemble": assemble, "sinks": sinks, "calendar": calendar}
+    for mod, fn in (
+        ("extract", "extract_documents"),
+        ("assemble", "parse_documents"),
+        ("assemble", "split_quarantine"),
+        ("assemble", "enrich_dates"),
+        ("sinks", "write_per_record_json"),
+        ("sinks", "write_all_courses_json"),
+        ("sinks", "write_courses_parquet"),
+        ("calendar", "render_pdf"),
+    ):
+        assert callable(getattr(modules[mod], fn, None)), f"{mod}.{fn}"

@@ -6,8 +6,10 @@ This is the test the reference never had (SURVEY.md section 5)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_upc_syllabus_spark.pipeline import assemble, calendar, sinks
 from etl_upc_syllabus_spark.pipeline.extract import route_tables
@@ -187,31 +189,55 @@ def test_sinks_roundtrip(spark, parsed, tmp_path):
 
 
 def test_sinks_executor_side_byte_identity(parsed, tmp_path):
-    """The executor-side fragment merge must reproduce exactly the bytes
+    """Every JSON entry point -- the S4 and S5 compat sinks and the
+    fused ``write_json_artifacts`` -- must reproduce exactly the bytes
     the old driver-side json.dump produced (S4 indent=2, S5 indent=4),
-    including across an empty DataFrame (S5 -> '[]')."""
+    on a 7-partition frame (most partitions empty) and on an empty
+    frame (S5 -> '[]'). The paths returned are the files written, and
+    no fragment litter is left behind. One name carries U+2028, which
+    str.splitlines() breaks on but JSON keeps inside the string."""
     good, _ = assemble.split_quarantine(parsed)
-    base = str(tmp_path)
-    files = sinks.write_per_record_json(good, base)
-    recs = [json.loads(r) for r in good.toJSON().collect()]
-    for rec in recs:
-        fname = f"{rec['name']}-{rec['nrc']}.json"
-        with open(f"{base}/{fname}", encoding="utf-8") as fh:
-            assert fh.read() == json.dumps(rec, ensure_ascii=False, indent=2)
-    assert len(files) == len(recs)
+    good = good.withColumn(
+        "name",
+        F.when(F.col("nrc") == "9001", F.concat("name", F.lit("\u2028II")))
+        .otherwise(F.col("name")),
+    )
 
-    all_path = sinks.write_all_courses_json(good.repartition(7), base)
-    with open(all_path, encoding="utf-8") as fh:
-        got = fh.read()
-    assert sorted(json.loads(got), key=lambda r: r["nrc"]) == sorted(recs, key=lambda r: r["nrc"])
-    # formatting is byte-for-byte json.dump(indent=4) of the same order
-    assert got == json.dumps(json.loads(got), ensure_ascii=False, indent=4)
-    # no fragment litter left behind
-    import os
-    assert sinks._FRAGMENTS_DIRNAME not in os.listdir(base)
+    def by_nrc(recs):
+        return sorted(recs, key=lambda r: r["nrc"])
 
-    empty_path = sinks.write_all_courses_json(good.limit(0), str(tmp_path / "empty"))
-    with open(empty_path, encoding="utf-8") as fh:
+    recs = by_nrc(json.loads(r) for r in good.toJSON().collect())
+
+    def check_per_record(base, files, want):
+        written = [os.path.join(base, f) for f in os.listdir(base)
+                   if f.endswith(".json") and f != "all_courses.json"]
+        assert sorted(files) == sorted(written)
+        assert len(files) == len(want)
+        for rec in want:
+            with open(os.path.join(base, f"{rec['name']}-{rec['nrc']}.json"), encoding="utf-8") as fh:
+                assert fh.read() == json.dumps(rec, ensure_ascii=False, indent=2)
+
+    def check_all_courses(base, path, want):
+        assert path == os.path.join(base, "all_courses.json")
+        with open(path, encoding="utf-8") as fh:
+            got = fh.read()
+        assert by_nrc(json.loads(got)) == want
+        # formatting is byte-for-byte json.dump(indent=4) of the same order
+        assert got == json.dumps(json.loads(got), ensure_ascii=False, indent=4)
+        assert sinks._FRAGMENTS_DIRNAME not in os.listdir(base)
+
+    for label, frame, want in (("seven", good.repartition(7), recs), ("empty", good.limit(0), [])):
+        base = str(tmp_path / label / "per_record")
+        check_per_record(base, sinks.write_per_record_json(frame, base), want)
+
+        base = str(tmp_path / label / "all_courses")
+        check_all_courses(base, sinks.write_all_courses_json(frame, base), want)
+
+        base = str(tmp_path / label / "fused")
+        files, all_path = sinks.write_json_artifacts(frame, base)
+        check_per_record(base, files, want)
+        check_all_courses(base, all_path, want)
+    with open(tmp_path / "empty" / "fused" / "all_courses.json", encoding="utf-8") as fh:
         assert fh.read() == "[]"
 
 
